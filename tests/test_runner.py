@@ -5,11 +5,19 @@ from __future__ import annotations
 
 import os
 import shutil
+from concurrent.futures import ThreadPoolExecutor
 
 import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
-from c2_duckdb_runner_spark.runner import run_scan, read_disk_stats
+from c2_duckdb_runner_spark.runner import (
+    _enumerate_files,
+    _group_by_footer,
+    read_disk_stats,
+    run_scan,
+)
 
 
 @pytest.fixture(scope="module")
@@ -174,3 +182,123 @@ def test_predicate_subquery_shape_pinned(spark, datadir, capsys):
     assert r.total_rows == 0
     assert r.n_files == 3
     assert "error scanning" in capsys.readouterr().err
+
+
+# ---------------------------------------------------------------------------
+# Footer-schema grouping: run_scan reads every footer in the driver and runs
+# one scan per group of files that infer the same schema. The counts must
+# equal the per-file scans exactly; only the number of Spark jobs changes.
+# ---------------------------------------------------------------------------
+
+
+def _ungrouped_job_ids(spark) -> set[int]:
+    """Ids of every job the status tracker holds that ran outside a job
+    group — run_scan's pool threads never carry one. The listener bus is
+    drained first, so a job that has just finished is already listed."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(None))
+
+
+def _groups(spark, paths):
+    with ThreadPoolExecutor(2) as pool:
+        return _group_by_footer(spark, paths, pool)
+
+
+def _write_values(path, values, value_type) -> None:
+    pq.write_table(
+        pa.table({
+            "id": pa.array(range(len(values)), pa.int64()),
+            "value": pa.array(values, value_type),
+        }),
+        str(path),
+    )
+
+
+def test_run_scan_job_count_is_constant_per_group(spark, datadir):
+    """Three same-schema files are one group: one schema-inference job plus
+    the count's jobs, where a scan per file runs three jobs per file."""
+    before = _ungrouped_job_ids(spark)
+    r = run_scan(spark, [datadir], predicate="value > 0.5")
+    jobs = _ungrouped_job_ids(spark) - before
+    assert r.n_files == 3 and r.total_rows > 0
+    assert 1 <= len(jobs) <= 3, sorted(jobs)
+
+
+def test_run_scan_group_failure_falls_back_per_file(spark, tmp_path, capsys):
+    """A file whose footer is valid but whose data pages are garbage groups
+    with its healthy siblings, so the group scan fails. Only that file logs;
+    the others are rescanned alone and counted exactly."""
+    d = tmp_path / "pages"
+    d.mkdir()
+    values = [[(i * 7 + k) % 10 / 8 for i in range(5000)] for k in range(3)]
+    for k, vals in enumerate(values):
+        _write_values(d / f"step{k}.parquet", vals, pa.float64())
+    bad = d / "step1.parquet"
+    raw = bytearray(bad.read_bytes())
+    footer_len = int.from_bytes(raw[-8:-4], "little")
+    data_end = len(raw) - 8 - footer_len
+    raw[4:data_end] = b"\xff" * (data_end - 4)  # page headers and pages
+    bad.write_bytes(bytes(raw))
+
+    r = run_scan(spark, [str(d)], predicate="value > 0.5")
+    err = capsys.readouterr().err
+    assert r.total_rows == sum(v > 0.5 for v in values[0] + values[2])
+    assert r.n_files == 3
+    assert err.count("error scanning") == 1 and "step1.parquet" in err
+
+
+def test_footer_groups_split_on_physical_type(spark, tmp_path, capsys):
+    """Same column names, different physical types (float vs double) in two
+    data directories: the groups follow the footer type, not the directory,
+    and the total equals the DuckDB count summed per file. A file whose name
+    Spark's listing hides is never grouped and fails alone, as it did when
+    every file had its own scan."""
+    dirs = [tmp_path / "a", tmp_path / "b"]
+    for j, d in enumerate(dirs):
+        d.mkdir()
+        for name, t in (("f32", pa.float32()), ("f64", pa.float64())):
+            vals = [((i + j) % 9) / 4 for i in range(1000 + 100 * j)]
+            _write_values(d / f"{name}.parquet", vals, t)
+    shutil.copy(dirs[1] / "f64.parquet", dirs[1] / "_hidden.parquet")
+
+    paths = _enumerate_files([str(d) for d in dirs])
+    groups, alone = _groups(spark, paths)
+    a, b = (str(d) for d in dirs)
+    assert sorted(map(sorted, groups)) == [
+        [f"{a}/f32.parquet", f"{b}/f32.parquet"],
+        [f"{a}/f64.parquet", f"{b}/f64.parquet"],
+    ]
+    assert alone == [f"{b}/_hidden.parquet"]
+
+    r = run_scan(spark, [a, b], predicate="value > 0.5")
+    oracle = sum(
+        duckdb.sql(f"SELECT count(*) FROM '{p}' WHERE value > 0.5").fetchone()[0]
+        for p in paths
+        if not p.endswith("_hidden.parquet")
+    )
+    assert r.total_rows == oracle
+    assert r.n_files == 5
+    err = capsys.readouterr().err
+    assert err.count("error scanning") == 1 and "_hidden.parquet" in err
+
+
+def test_footer_groups_stay_under_the_listing_threshold(spark, datadir, tmp_path):
+    """A group larger than the path count at which Spark lists paths in a
+    job of its own is split evenly; a one-file remainder is scanned alone.
+    The total is unchanged."""
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    paths = []
+    for i in range(5):
+        paths.append(str(tmp_path / f"step{i}.parquet"))
+        shutil.copy(f"{datadir}/step0.parquet", paths[-1])
+    whole = run_scan(spark, [datadir], predicate="value > 0.5")
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        groups, alone = _groups(spark, paths)
+        r = run_scan(spark, [str(tmp_path)], predicate="value > 0.5")
+    finally:
+        spark.conf.set(key, old)
+    assert groups == [paths[0:2], paths[2:4]] and alone == paths[4:]
+    assert r.total_rows == 5 * (whole.total_rows // 3)
