@@ -25,15 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.relations import TRADE_EDGES_SQL, sdiv, trade_edges
 from c2_duckdb_runner_spark.tables import load
-
-
-def _sdiv(num: str, den: str, engine: str) -> str:
-    op = "div" if engine == "spark" else "//"
-    return (
-        f"CASE WHEN ({num}) >= 0 THEN ({num}) {op} ({den})"
-        f" ELSE -((-({num})) {op} ({den})) END"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -44,14 +37,14 @@ def _sdiv(num: str, den: str, engine: str) -> str:
 def _cuped_oracle() -> str:
     sdx_duck = (
         "("
-        + _sdiv("1000 * ax", "n_users", "duck")
+        + sdiv("1000 * ax", "n_users", "duck")
         + " - "
-        + _sdiv("1000 * sx", "n", "duck")
+        + sdiv("1000 * sx", "n", "duck")
         + ")"
     )
-    y_mean = _sdiv("1000 * ay", "n_users", "duck")
-    adj = _sdiv(f"th_micro * {sdx_duck}", "1000000", "duck")
-    th = _sdiv(
+    y_mean = sdiv("1000 * ay", "n_users", "duck")
+    adj = sdiv(f"th_micro * {sdx_duck}", "1000000", "duck")
+    th = sdiv(
         "1000000 * (n * sxy - CAST(sx AS HUGEINT) * sy)",
         "GREATEST(n * sxx - CAST(sx AS HUGEINT) * sx, 1)",
         "duck",
@@ -137,7 +130,7 @@ def ab_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "sx",
         F.expr(
-            _sdiv(
+            sdiv(
                 "1000000 * (n * sxy - CAST(sx AS DECIMAL(19,0)) * sy)",
                 "GREATEST(n * sxx - CAST(sx AS DECIMAL(19,0)) * sx, 1)",
                 "spark",
@@ -152,19 +145,19 @@ def ab_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("y").cast("bigint").alias("ay"),
     )
     sdx = (
-        _sdiv("1000 * ax", "n_users", "spark")
+        sdiv("1000 * ax", "n_users", "spark")
         + " - "
-        + _sdiv("1000 * sx", "n", "spark")
+        + sdiv("1000 * sx", "n", "spark")
     )
     return arms.crossJoin(F.broadcast(theta)).select(
         F.col("arm").cast("bigint").alias("arm"),
         "n_users",
-        F.expr(f"CAST({_sdiv('1000 * ay', 'n_users', 'spark')} AS BIGINT)").alias(
+        F.expr(f"CAST({sdiv('1000 * ay', 'n_users', 'spark')} AS BIGINT)").alias(
             "y_mean_micro"
         ),
         F.expr(
-            f"CAST({_sdiv('1000 * ay', 'n_users', 'spark')}"
-            f" - {_sdiv(f'th_micro * ({sdx})', '1000000', 'spark')} AS BIGINT)"
+            f"CAST({sdiv('1000 * ay', 'n_users', 'spark')}"
+            f" - {sdiv(f'th_micro * ({sdx})', '1000000', 'spark')} AS BIGINT)"
         ).alias("y_adj_micro"),
         F.col("th_micro").cast("bigint").alias("theta_micro"),
     )
@@ -174,23 +167,11 @@ def ab_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # graph_label_propagation_sync
 # ---------------------------------------------------------------------------
 
-_OFFSET = 10_000_000
 _LPA_ROUNDS = 3
-
-_EDGES_SQL = f"""
-  SELECT DISTINCT o_custkey AS src, {_OFFSET} + l_suppkey AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-  WHERE o_custkey IS NOT NULL AND l_suppkey IS NOT NULL
-  UNION
-  SELECT DISTINCT {_OFFSET} + l_suppkey AS src, o_custkey AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-  WHERE o_custkey IS NOT NULL AND l_suppkey IS NOT NULL
-"""
-
 
 def _lpa_oracle() -> str:
     ctes = [
-        f"edges AS ({_EDGES_SQL})",
+        f"edges AS ({TRADE_EDGES_SQL})",
         "l0 AS (SELECT DISTINCT src AS id, src AS label FROM edges)",
     ]
     for t in range(1, _LPA_ROUNDS + 1):
@@ -239,33 +220,13 @@ def graph_label_propagation_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     partially-folded row per node instead of pushing every (node, label)
     count through a row_number window's full shuffle + sort (the
     simsearch_kmeans_assign recipe). Same total tie-break, same rows."""
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        # NULL endpoints are not graph nodes (r11 hostile pin)
-        .filter(
-            F.col("o_custkey").isNotNull() & F.col("l_suppkey").isNotNull()
-        )
-        .select("o_custkey", (F.lit(_OFFSET) + F.col("l_suppkey")).alias("supp"))
-        .distinct()
-        # r12: mirror from the materialized pair list — the union's two
-        # identical subtrees don't collapse under AQE (see graph._edges)
-        .localCheckpoint(eager=True)
-    )
     from c2_duckdb_runner_spark.session import scratch_persist
 
     # Persist hash-partitioned on dst: every round's message join keys on
     # dst = label-carrier id, so the cached layout is reused by all rounds
     # instead of re-exchanging |E| rows per round.
     edges = scratch_persist(
-        pairs.select(
-            F.col("o_custkey").alias("src"), F.col("supp").alias("dst")
-        )
-        .union(
-            pairs.select(F.col("supp").alias("src"), F.col("o_custkey").alias("dst"))
-        )
-        .repartition(F.col("dst"))
+        trade_edges(spark, sf_dir).repartition(F.col("dst"))
     )
     labels = edges.select(F.col("src").alias("id")).distinct().select(
         "id", F.col("id").alias("label")
@@ -367,7 +328,7 @@ lagged AS (
 )
 SELECT event_type, epoch_ms(w) AS week_ms, rev AS rev_cents,
        CAST(CASE WHEN prev IS NULL OR prev = 0 THEN NULL
-            ELSE {_sdiv('1000000 * (rev - prev)', 'prev', 'duck')} END AS BIGINT)
+            ELSE {sdiv('1000000 * (rev - prev)', 'prev', 'duck')} END AS BIGINT)
          AS wow_change_micro
 FROM lagged
 """,
@@ -402,6 +363,6 @@ def window_pct_change_wow(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rev").alias("rev_cents"),
         F.expr(
             "CAST(CASE WHEN prev IS NULL OR prev = 0 THEN NULL"
-            f" ELSE {_sdiv('1000000 * (rev - prev)', 'prev', 'spark')} END AS BIGINT)"
+            f" ELSE {sdiv('1000000 * (rev - prev)', 'prev', 'spark')} END AS BIGINT)"
         ).alias("wow_change_micro"),
     )

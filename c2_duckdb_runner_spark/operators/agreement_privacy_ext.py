@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.relations import TRADE_EDGES_SQL, trade_edges
 from c2_duckdb_runner_spark.session import scratch_persist, shuffle_width
 from c2_duckdb_runner_spark.tables import load
 
@@ -38,14 +39,8 @@ from c2_duckdb_runner_spark.tables import load
 # graph_wl_refinement
 # ---------------------------------------------------------------------------
 
-_WL_ORACLE = """
-WITH pairs AS (
-  SELECT DISTINCT o.o_custkey AS c, 10000000 + l.l_suppkey AS s
-  FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-),
-edges AS (
-  SELECT c AS src, s AS dst FROM pairs UNION ALL SELECT s, c FROM pairs
-),
+_WL_ORACLE = f"""
+WITH edges AS ({TRADE_EDGES_SQL}),
 c0 AS (SELECT src AS v, CAST(COUNT(*) AS VARCHAR) AS col FROM edges GROUP BY 1),
 c1 AS (
   SELECT e.src AS v,
@@ -76,8 +71,8 @@ SELECT * FROM (
 def graph_wl_refinement(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two rounds of Weisfeiler-Lehman color refinement on the symmetrized
     customer–supplier graph (same edge relation as PageRank/BFS,
-    ``graph.py:41``): color₀ = degree, colorₖ = md5(own ∥ sorted multiset
-    of neighbor colors), reporting the color-count trajectory
+    ``relations.trade_edges``): color₀ = degree, colorₖ = md5(own ∥
+    sorted multiset of neighbor colors), reporting the color-count trajectory
     (12 → 27 → 31 at sf0.001) that certifies refinement progress.
 
     Scale shape (r11 optimization round): the persisted edge relation
@@ -93,24 +88,8 @@ def graph_wl_refinement(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiset is per-node bounded state (degree-sized array, sorted then
     folded into md5), never corpus state. Colors are md5-canonical so
     the trajectory is engine- and partitioning-independent."""
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select("o_custkey", (F.lit(10000000) + F.col("l_suppkey")).alias("supp"))
-        .distinct()
-        # r12: mirror from the materialized pair list — the union's two
-        # identical subtrees don't collapse under AQE (see graph._edges)
-        .localCheckpoint(eager=True)
-    )
     nparts = shuffle_width(spark)
-    edges = scratch_persist(
-        pairs.select(F.col("o_custkey").alias("src"), F.col("supp").alias("dst"))
-        .union(
-            pairs.select(F.col("supp").alias("src"), F.col("o_custkey").alias("dst"))
-        )
-        .repartition(nparts, "dst")
-    )
+    edges = scratch_persist(trade_edges(spark, sf_dir).repartition(nparts, "dst"))
 
     def refine(colors: DataFrame) -> DataFrame:
         cn = colors.select(F.col("v").alias("dst"), F.col("col").alias("ncol"))

@@ -18,8 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from c2_duckdb_runner_spark.operators.graph import _EDGES_SQL as _GRAPH_EDGES_SQL
 from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.relations import TRADE_EDGES_SQL, trade_edges
 from c2_duckdb_runner_spark.tables import load
 
 
@@ -171,7 +171,7 @@ def agg_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "graph_degree_assortativity",
     oracle=f"""
 WITH edges AS (
-{_GRAPH_EDGES_SQL}
+{TRADE_EDGES_SQL}
 ),
 deg AS (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY src),
 pairs AS (
@@ -217,9 +217,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     decorating each directed edge with endpoint degrees (the symmetrized
     edge list counts each undirected edge in both directions — the
     standard convention), one global sufficient-stats reduce."""
-    from c2_duckdb_runner_spark.operators.graph import _edges
-
-    edges = _edges(spark, sf_dir)
+    edges = trade_edges(spark, sf_dir)
     deg = edges.groupBy("src").agg(F.count("*").cast("bigint").alias("d"))
     pairs = (
         edges.join(deg.select(F.col("src"), F.col("d").alias("x")), "src")

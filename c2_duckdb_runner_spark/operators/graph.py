@@ -10,6 +10,7 @@ Graph: the customer–supplier trade network. Every (customer, supplier)
 pair connected through an order is an edge, materialized in BOTH
 directions, so the graph is cyclic and ranks keep moving each iteration.
 Supplier node ids are offset by 10M to keep the two key spaces disjoint.
+The edge list and its oracle SQL live in ``relations.py``.
 
 Determinism: ranks live as int64 micro-units; per-edge contributions use
 integer division, damping is (850 * s) div 1000. Every iteration is exact,
@@ -23,60 +24,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.relations import (
+    TRADE_ARCS_SQL,
+    TRADE_EDGES_SQL,
+    trade_edges,
+    trade_join,
+)
 from c2_duckdb_runner_spark.session import scratch_persist, shuffle_width
 from c2_duckdb_runner_spark.tables import load
 
-_OFFSET = 10_000_000
 _ITERS = 3
-
-# NULL endpoints are not graph nodes (r11 hostile pin): a NULL custkey/
-# suppkey would ride Spark's null-grouping through aggregation steps but
-# drop out of the oracle's equality joins — excluded at the source, both
-# sides, for every consumer of this edge list.
-_EDGES_SQL = f"""
-  SELECT DISTINCT o_custkey AS src, {_OFFSET} + l_suppkey AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-  WHERE o_custkey IS NOT NULL AND l_suppkey IS NOT NULL
-  UNION
-  SELECT DISTINCT {_OFFSET} + l_suppkey AS src, o_custkey AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-  WHERE o_custkey IS NOT NULL AND l_suppkey IS NOT NULL
-"""
-
-
-def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    # Dedup the (customer, supplier) pairs BEFORE symmetrizing: the forward
-    # and reverse key spaces are disjoint (supplier ids offset by 10M), so
-    # distinct-then-mirror equals mirror-then-distinct while shuffling |E|
-    # pairs instead of 2|E|.
-    # r12: the mirror references `pairs` twice, and the union's two
-    # identical join+distinct subtrees do NOT collapse under AQE (no
-    # exchange/stage reuse fired — the sf1 bench event log shows the
-    # orders⨝lineitem scan+join running once per side). Checkpoint the
-    # deduped pair list once and mirror the materialized RDD:
-    # graph_pagerank_iterations 3.75 → 2.80 s A/B at sf0.1.
-    pairs = (
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        .filter(
-            F.col("o_custkey").isNotNull() & F.col("l_suppkey").isNotNull()
-        )
-        .select(
-            "o_custkey", (F.lit(_OFFSET) + F.col("l_suppkey")).alias("supp")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    fwd = pairs.select(F.col("o_custkey").alias("src"), F.col("supp").alias("dst"))
-    rev = pairs.select(F.col("supp").alias("src"), F.col("o_custkey").alias("dst"))
-    return fwd.union(rev)
 
 
 def _pagerank_oracle() -> str:
     """Unroll _ITERS exact integer PageRank steps as a DuckDB CTE chain."""
     ctes = [
-        f"edges AS ({_EDGES_SQL})",
+        f"edges AS ({TRADE_EDGES_SQL})",
         "nodes AS (SELECT DISTINCT src AS id FROM edges "
         "UNION SELECT DISTINCT dst FROM edges)",
         "deg AS (SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src)",
@@ -116,7 +79,7 @@ def graph_pagerank_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the edge build (join + symmetrize + distinct) feeds deg, the node
     # spine, and the contribution loop — persist it once or every consumer
     # replays the order⨝lineitem join
-    edges = scratch_persist(_edges(spark, sf_dir))
+    edges = scratch_persist(trade_edges(spark, sf_dir))
     deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
     edges_deg = scratch_persist(
         edges.join(deg, "src").repartition(shuffle_width(spark), "src")
@@ -157,12 +120,6 @@ def graph_pagerank_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EPS = 2_000_000  # micro-units: stop when max per-node change < 2.0 rank
 _MAX_ROUNDS = 14  # unroll depth; convergence lands ~round 11 at all sfs
 
-_DIRECTED_EDGES_SQL = f"""
-  SELECT DISTINCT o_custkey AS src, {_OFFSET} + l_suppkey AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-  WHERE o_custkey IS NOT NULL AND l_suppkey IS NOT NULL
-"""
-
 
 def _pagerank_converged_oracle() -> str:
     """Unroll _MAX_ROUNDS freeze-on-convergence steps as a CTE chain.
@@ -174,7 +131,7 @@ def _pagerank_converged_oracle() -> str:
     exactly the Spark loop's early-exit semantics — and Σ(d{i} >= eps)
     equals the number of rounds the loop actually advanced."""
     ctes = [
-        f"edges AS MATERIALIZED ({_DIRECTED_EDGES_SQL})",
+        f"edges AS MATERIALIZED ({TRADE_ARCS_SQL})",
         "nodes AS MATERIALIZED (SELECT DISTINCT src AS id FROM edges "
         "UNION SELECT DISTINCT dst FROM edges)",
         "deg AS MATERIALIZED (SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src)",
@@ -232,18 +189,9 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy shuffle + two scalar reduces (dangling mass, max-delta — bytes
     to the driver, never rows); ranks localCheckpoint-ed so lineage stays
     flat across a data-dependent number of rounds."""
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     edges = scratch_persist(
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        # NULL endpoints are not graph nodes (r11 hostile pin)
-        .filter(
-            F.col("o_custkey").isNotNull() & F.col("l_suppkey").isNotNull()
-        )
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.lit(_OFFSET) + F.col("l_suppkey")).alias("dst"),
-        )
+        trade_join(spark, sf_dir)
+        .select(F.col("o_custkey").alias("src"), F.col("supp").alias("dst"))
         .distinct()
     )
     deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
@@ -338,7 +286,7 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "graph_degree_distribution",
     oracle=f"""
-WITH edges AS ({_EDGES_SQL}),
+WITH edges AS ({TRADE_EDGES_SQL}),
 deg AS (SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src)
 SELECT outdeg, CAST(COUNT(*) AS BIGINT) AS n_nodes
 FROM deg GROUP BY outdeg
@@ -350,7 +298,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     second groupBy keys on low-cardinality outdeg, but its input is
     already one row per node (the heavy reduction happened in shuffle #1),
     so the skew ceiling is |V|, not |E|."""
-    edges = _edges(spark, sf_dir)
+    edges = trade_edges(spark, sf_dir)
     deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
     return deg.groupBy("outdeg").agg(F.count("*").alias("n_nodes"))
 
@@ -473,7 +421,7 @@ def _bfs_oracle() -> str:
     """Unroll _BFS_ROUNDS exact relaxation steps as a DuckDB CTE chain —
     integer distances, so the replay is bit-for-bit."""
     parts = [
-        f"""WITH e AS ({_EDGES_SQL}),
+        f"""WITH e AS ({TRADE_EDGES_SQL}),
 d0 AS (SELECT c_custkey AS node, 0 AS dist FROM customer
        WHERE c_custkey % 100 = 0)"""
     ]
@@ -517,7 +465,7 @@ def graph_bfs_multisource(spark: SparkSession, sf_dir: str) -> DataFrame:
     what the oracle can replay exactly and the per-round cost model is
     identical, just un-truncated."""
     edges = scratch_persist(
-        _edges(spark, sf_dir).repartition(shuffle_width(spark), "src")
+        trade_edges(spark, sf_dir).repartition(shuffle_width(spark), "src")
     )
     dist = (
         load(spark, sf_dir, "customer")

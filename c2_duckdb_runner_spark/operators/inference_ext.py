@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.relations import DAILY_MILLI_SQL, daily_milli
 from c2_duckdb_runner_spark.tables import load
 
 # ---------------------------------------------------------------------------
@@ -42,36 +43,10 @@ from c2_duckdb_runner_spark.tables import load
 # conservative integer-micro threshold used for the one-bit verdict.
 _ANOVA_CRIT_MICRO = 2_500_000
 
-_DAILY_SQL = """
-  SELECT event_type, date_trunc('day', ts) AS d,
-         (10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))
-           // CAST(COUNT(*) AS BIGINT) AS x
-  FROM events GROUP BY event_type, date_trunc('day', ts)
-"""
-
-
-def _daily_milli(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily mean event value per type, in integer MILLI-units.
-
-    The integral division is part of the statistic's definition (both
-    engines truncate toward zero on positive operands), so every
-    downstream sum/product is exact cross-engine."""
-    return (
-        load(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("d"))
-        .agg(
-            F.expr(
-                "(10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))"
-                " div CAST(COUNT(*) AS BIGINT)"
-            ).alias("x")
-        )
-    )
-
-
 @register(
     "stats_anova_f_daily",
     oracle=f"""
-WITH daily AS ({_DAILY_SQL}),
+WITH daily AS ({DAILY_MILLI_SQL}),
 g AS (
   SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_g,
          CAST(SUM(x) AS BIGINT) AS t_g,
@@ -119,7 +94,7 @@ def stats_anova_f_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the events collapse to a (k·~30)-row daily table in one
     scan; everything after is constant-size. At 100 TB the daily rollup
     is the only cost, and it re-aggregates from pre-binned partials."""
-    daily = _daily_milli(spark, sf_dir)
+    daily = daily_milli(spark, sf_dir)
     g = daily.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("n_g"),
         F.sum("x").cast("bigint").alias("t_g"),
@@ -177,7 +152,7 @@ def stats_anova_f_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_autocorr_lags",
     oracle=f"""
-WITH daily AS ({_DAILY_SQL}),
+WITH daily AS ({DAILY_MILLI_SQL}),
 means AS (
   SELECT event_type, CAST(SUM(x) AS BIGINT) // CAST(COUNT(*) AS BIGINT) AS m
   FROM daily GROUP BY event_type
@@ -229,7 +204,7 @@ def ts_autocorr_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     by event_type, so no global sort exists at any scale. ~30 points per
     key regardless of corpus size: the downsample carries the statistic,
     exactly like ts_mann_kendall_trend."""
-    daily = _daily_milli(spark, sf_dir)
+    daily = daily_milli(spark, sf_dir)
     means = daily.groupBy("event_type").agg(
         F.expr("CAST(SUM(x) AS BIGINT) div CAST(COUNT(*) AS BIGINT)").alias("m")
     )

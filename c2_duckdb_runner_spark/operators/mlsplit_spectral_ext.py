@@ -29,6 +29,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.relations import (
+    DAILY_MILLI_SQL,
+    TRADE_EDGES_SQL,
+    daily_milli,
+    sdiv,
+    trade_edges,
+)
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
 
@@ -36,21 +43,9 @@ from c2_duckdb_runner_spark.tables import load
 # graph_node2vec_biased_walk
 # ---------------------------------------------------------------------------
 
-_OFFSET = 10_000_000  # supplier-id offset; same convention as graph.py
 _N2V_SEEDS = 10
 _N2V_BIASED_STEPS = 3  # biased hops after the first uniform hop
 _W_RET, _W_COM, _W_FAR = 2, 6, 3  # ≙ 1/p : 1 : 1/q with p=3, q=2 (scaled ×6)
-
-_EDGES_SQL = f"""
-  SELECT DISTINCT o_custkey AS src, {_OFFSET} + l_suppkey AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-  WHERE o_custkey IS NOT NULL AND l_suppkey IS NOT NULL
-  UNION
-  SELECT DISTINCT {_OFFSET} + l_suppkey AS src, o_custkey AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-  WHERE o_custkey IS NOT NULL AND l_suppkey IS NOT NULL
-"""
-
 
 def _n2v_coin(engine: str, step: int) -> str:
     s = f"CAST(walk_id AS STRING) || '_n2v{step}_' || CAST(cur AS STRING)"
@@ -64,7 +59,7 @@ def _n2v_coin(engine: str, step: int) -> str:
 
 def _n2v_oracle() -> str:
     ctes = [
-        f"edges AS ({_EDGES_SQL})",
+        f"edges AS ({TRADE_EDGES_SQL})",
         f"""ranked AS (
   SELECT src, dst,
          ROW_NUMBER() OVER (PARTITION BY src ORDER BY dst) - 1 AS idx,
@@ -144,32 +139,12 @@ def graph_node2vec_biased_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter), not the whole edge list. Frontier stays one row per walker
     after every hop's range filter, so cost per hop is O(Σ outdeg(cur))
     — the same as any neighbor expansion — at any number of walkers."""
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        # NULL endpoints are not graph nodes (r11 hostile pin)
-        .filter(
-            F.col("o_custkey").isNotNull() & F.col("l_suppkey").isNotNull()
-        )
-        .select("o_custkey", (F.lit(_OFFSET) + F.col("l_suppkey")).alias("supp"))
-        .distinct()
-        # r12: mirror from the materialized pair list — the union's two
-        # identical subtrees don't collapse under AQE (see graph._edges)
-        .localCheckpoint(eager=True)
-    )
     # Persist the edge relation ALREADY hash-partitioned on src: every hop
     # joins on cur = src and the adjacency-check joins on prev = psrc, so
     # caching the partitioned layout lets all 2x{_N2V_BIASED_STEPS}+1 joins
     # reuse it instead of re-exchanging |E| rows per hop.
     edges = scratch_persist(
-        pairs.select(
-            F.col("o_custkey").alias("src"), F.col("supp").alias("dst")
-        )
-        .union(
-            pairs.select(F.col("supp").alias("src"), F.col("o_custkey").alias("dst"))
-        )
-        .repartition(F.col("src"))
+        trade_edges(spark, sf_dir).repartition(F.col("src"))
     )
     # Per-node adjacency arrays: ONE groupBy over the persisted edges,
     # consumed by every hop's prev-adjacency membership test. The arrays
@@ -459,26 +434,10 @@ def _trig_case(col: str, table: tuple[int, ...]) -> str:
     return f"CASE {whens} END"
 
 
-def _sdiv(num: str, den: str, engine: str) -> str:
-    op = "div" if engine == "spark" else "//"
-    return (
-        f"CASE WHEN ({num}) >= 0 THEN ({num}) {op} ({den})"
-        f" ELSE -((-({num})) {op} ({den})) END"
-    )
-
-
-_DAILY_SQL = """
-  SELECT event_type, date_trunc('day', ts) AS d,
-         (10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))
-           // CAST(COUNT(*) AS BIGINT) AS x
-  FROM events GROUP BY event_type, date_trunc('day', ts)
-"""
-
-
 @register(
     "ts_dft_weekly_power",
     oracle=f"""
-WITH daily AS ({_DAILY_SQL}),
+WITH daily AS ({DAILY_MILLI_SQL}),
 idx AS (
   SELECT event_type, x,
          CAST((ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY d) - 1) % 7
@@ -493,8 +452,8 @@ ft AS (
 ),
 sc AS (
   SELECT event_type, n_points,
-         {_sdiv('re_raw', '1000000', 'duck')} AS re_milli,
-         {_sdiv('im_raw', '1000000', 'duck')} AS im_milli
+         {sdiv('re_raw', '1000000', 'duck')} AS re_milli,
+         {sdiv('im_raw', '1000000', 'duck')} AS im_milli
   FROM ft
 )
 SELECT event_type, n_points,
@@ -516,16 +475,7 @@ def ts_dft_weekly_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one keyed rollup to the bounded daily series, a
     per-key window for the day index, one keyed aggregate. Constant
     work per key."""
-    daily = (
-        load(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("d"))
-        .agg(
-            F.expr(
-                "(10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))"
-                " div CAST(COUNT(*) AS BIGINT)"
-            ).alias("x")
-        )
-    )
+    daily = daily_milli(spark, sf_dir)
     idx = daily.select(
         "event_type",
         "x",
@@ -553,8 +503,8 @@ def ts_dft_weekly_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     sc = ft.select(
         "event_type",
         "n_points",
-        F.expr(_sdiv("re_raw", "1000000", "spark")).alias("re_milli"),
-        F.expr(_sdiv("im_raw", "1000000", "spark")).alias("im_milli"),
+        F.expr(sdiv("re_raw", "1000000", "spark")).alias("re_milli"),
+        F.expr(sdiv("im_raw", "1000000", "spark")).alias("im_milli"),
     )
     return sc.select(
         "event_type",

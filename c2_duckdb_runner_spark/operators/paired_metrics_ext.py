@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.relations import TRADE_ARCS_SQL, trade_join
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
 
@@ -116,16 +117,13 @@ def ts_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # graph_rich_club
 # ---------------------------------------------------------------------------
 
-_RICHCLUB_ORACLE = """
-WITH pairs AS (
-  SELECT DISTINCT o.o_custkey AS c, 10000000 + l.l_suppkey AS s
-  FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-),
-edges AS (SELECT c AS src, s AS dst FROM pairs UNION ALL SELECT s, c FROM pairs),
+_RICHCLUB_ORACLE = f"""
+WITH pairs AS ({TRADE_ARCS_SQL}),
+edges AS (SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs),
 deg AS (SELECT src AS v, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY 1),
 ed AS (
   SELECT ds.d AS d_src, dd.d AS d_dst
-  FROM pairs p JOIN deg ds ON ds.v = p.c JOIN deg dd ON dd.v = p.s
+  FROM pairs p JOIN deg ds ON ds.v = p.src JOIN deg dd ON dd.v = p.dst
 ),
 ks AS (SELECT unnest([2, 4, 8, 16]) AS k),
 club AS (
@@ -153,14 +151,7 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     four thresholds evaluate as conditional sums in ONE pass over that
     annotated edge relation (stack-unpivoted to rows) — adding thresholds
     never adds passes."""
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select("o_custkey", (F.lit(10000000) + F.col("l_suppkey")).alias("supp"))
-        .distinct()
-    )
-    pairs = scratch_persist(pairs)
+    pairs = scratch_persist(trade_join(spark, sf_dir).distinct())
     edges = pairs.select(F.col("o_custkey").alias("src"), F.col("supp").alias("dst")).union(
         pairs.select(F.col("supp").alias("src"), F.col("o_custkey").alias("dst"))
     )

@@ -25,8 +25,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from c2_duckdb_runner_spark.operators.graph import _EDGES_SQL, _OFFSET, _edges
 from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.relations import (
+    SUPPLIER_OFFSET,
+    TRADE_EDGES_SQL,
+    trade_edges,
+)
 from c2_duckdb_runner_spark.session import scratch_persist, shuffle_width
 from c2_duckdb_runner_spark.tables import load
 
@@ -38,13 +42,13 @@ _PPR_ITERS = 3
 _PPR_SEED_MOD = 50  # customer nodes with id % 50 == 0 are the trust seeds
 _PPR_TOP = 15
 
-_PPR_SEED_SQL = f"(id % {_PPR_SEED_MOD} = 0 AND id < {_OFFSET})"
+_PPR_SEED_SQL = f"(id % {_PPR_SEED_MOD} = 0 AND id < {SUPPLIER_OFFSET})"
 
 
 def _ppr_oracle() -> str:
     """Unroll _PPR_ITERS exact seed-teleport steps as a CTE chain."""
     ctes = [
-        f"edges AS ({_EDGES_SQL})",
+        f"edges AS ({TRADE_EDGES_SQL})",
         "nodes AS (SELECT DISTINCT src AS id FROM edges "
         "UNION SELECT DISTINCT dst FROM edges)",
         "deg AS (SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src)",
@@ -59,7 +63,7 @@ def _ppr_oracle() -> str:
         )
         ctes.append(
             f"r{i} AS (SELECT n.id, CAST(CASE WHEN n.id % {_PPR_SEED_MOD} = 0"
-            f" AND n.id < {_OFFSET} "
+            f" AND n.id < {SUPPLIER_OFFSET} "
             f"THEN 150000 ELSE 0 END + (850 * COALESCE(c{i}.s, 0)) // 1000 "
             f"AS BIGINT) AS r FROM nodes n "
             f"LEFT JOIN c{i} ON c{i}.id = n.id)"
@@ -113,16 +117,16 @@ def graph_ppr_seed_teleport(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     edges_deg = scratch_persist(
-        _edges(spark, sf_dir)
+        trade_edges(spark, sf_dir)
         .repartition(shuffle_width(spark), "src")
         .withColumn("outdeg", F.count("*").over(Window.partitionBy("src")))
     )
     seed_case = (
-        f"CASE WHEN id % {_PPR_SEED_MOD} = 0 AND id < {_OFFSET}"
+        f"CASE WHEN id % {_PPR_SEED_MOD} = 0 AND id < {SUPPLIER_OFFSET}"
         " THEN 1 ELSE 0 END"
     )
     tele_src = (
-        f"CASE WHEN src % {_PPR_SEED_MOD} = 0 AND src < {_OFFSET}"
+        f"CASE WHEN src % {_PPR_SEED_MOD} = 0 AND src < {SUPPLIER_OFFSET}"
         " THEN 150000 ELSE 0 END"
     )
     # round 1: r0 is the teleport-only vector (seeds at 1e6), a pure
@@ -131,7 +135,7 @@ def graph_ppr_seed_teleport(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges_deg.select(
             "dst",
             F.expr(
-                f"(CASE WHEN src % {_PPR_SEED_MOD} = 0 AND src < {_OFFSET}"
+                f"(CASE WHEN src % {_PPR_SEED_MOD} = 0 AND src < {SUPPLIER_OFFSET}"
                 " THEN 1000000 ELSE 0 END) div outdeg"
             ).alias("c"),
         )
@@ -169,7 +173,7 @@ def graph_ppr_seed_teleport(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("id").alias("node"),
             F.expr(
                 f"CAST(CASE WHEN id % {_PPR_SEED_MOD} = 0"
-                f" AND id < {_OFFSET} THEN 150000 ELSE 0 END"
+                f" AND id < {SUPPLIER_OFFSET} THEN 150000 ELSE 0 END"
                 " + flow AS BIGINT)"
             ).alias("rank_micros"),
             F.expr(f"CAST({seed_case} AS INT)").alias("is_seed"),

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.relations import DAILY_MILLI_SQL, daily_milli
 from c2_duckdb_runner_spark.tables import load
 
 # ---------------------------------------------------------------------------
@@ -218,12 +219,7 @@ def stats_mad_robust_z(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PH_LAMBDA = 50_000  # alarm threshold, milli-units
 
 _PH_ORACLE = f"""
-WITH daily AS (
-  SELECT event_type, date_trunc('day', ts) AS d,
-         (10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))
-           // CAST(COUNT(*) AS BIGINT) AS x
-  FROM events GROUP BY 1, 2
-),
+WITH daily AS ({DAILY_MILLI_SQL}),
 m AS (
   SELECT event_type, CAST(SUM(x) AS BIGINT) AS sx,
          CAST(COUNT(*) AS BIGINT) AS nd
@@ -266,16 +262,7 @@ def ts_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts_* family contract) partitioned by type. Integer milli end-to-end:
     x uses the shared (10·cents) div count convention, so both engines
     agree bit-for-bit."""
-    e = load(spark, sf_dir, "events")
-    daily = (
-        e.select(
-            "event_type",
-            F.date_trunc("day", "ts").alias("d"),
-            F.expr("CAST(round(value * 100) AS BIGINT)").alias("c"),
-        )
-        .groupBy("event_type", "d")
-        .agg(F.expr("(10 * SUM(c)) div COUNT(*)").alias("x"))
-    )
+    daily = daily_milli(spark, sf_dir)
     mu = daily.groupBy("event_type").agg(
         F.expr("CAST(SUM(x) AS BIGINT) div COUNT(*)").alias("mean_milli"),
         F.count("*").cast("bigint").alias("nd"),

@@ -29,8 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from c2_duckdb_runner_spark.operators.graph import _EDGES_SQL
 from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.relations import TRADE_EDGES_SQL, trade_join
 from c2_duckdb_runner_spark.tables import load
 
 # ---------------------------------------------------------------------------
@@ -125,7 +125,7 @@ def eval_auprc_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KNN_ORACLE = f"""
 WITH edges AS (
-{_EDGES_SQL}
+{TRADE_EDGES_SQL}
 ),
 deg AS (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS d
         FROM edges GROUP BY src)
@@ -164,24 +164,14 @@ def graph_avg_neighbor_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts of the forward and reverse edge orientations simply ADD — the
     final merge is a degree-domain-sized aggregate. Zero broadcast
     assumptions: the same plan (and the same shuffle bytes per row)
-    executes at any scale. Cites graph.py _EDGES_SQL / _OFFSET
+    executes at any scale. Cites relations.TRADE_EDGES_SQL / trade_join
     (``main.cc:181-182`` reach)."""
-    from c2_duckdb_runner_spark.operators.graph import _OFFSET
     from c2_duckdb_runner_spark.session import scratch_persist, shuffle_width
 
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     nparts = shuffle_width(spark)
     pairs = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        # NULL endpoints are not graph nodes (r11 hostile pin)
-        .filter(
-            F.col("o_custkey").isNotNull() & F.col("l_suppkey").isNotNull()
-        )
-        .select(
-            F.col("o_custkey").alias("c"),
-            (F.lit(_OFFSET) + F.col("l_suppkey")).alias("s"),
-        )
+        trade_join(spark, sf_dir)
+        .select(F.col("o_custkey").alias("c"), F.col("supp").alias("s"))
         .repartition(nparts, "c")
         .dropDuplicates()
     )

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.registry import fdoc, register
+from c2_duckdb_runner_spark.relations import SUPPLIER_OFFSET
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
 
@@ -472,7 +473,6 @@ def agg_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _THR_SEED_MOD = 200
 _THR_TOP = 20
-_THR_OFFSET = 10_000_000  # graph.py:29
 
 _THR_ORACLE = f"""
 WITH cs AS (
@@ -482,12 +482,12 @@ WITH cs AS (
 seeds AS (SELECT c_custkey AS seed FROM customer
           WHERE c_custkey % {_THR_SEED_MOD} = 0),
 hop1 AS (  -- seed customer -> supplier nodes
-  SELECT seeds.seed, {_THR_OFFSET} + cs.s AS node
+  SELECT seeds.seed, {SUPPLIER_OFFSET} + cs.s AS node
   FROM seeds JOIN cs ON cs.c = seeds.seed
 ),
 hop2 AS (  -- supplier -> customer nodes (excluding the seed itself)
   SELECT h.seed, b.c AS node
-  FROM hop1 h JOIN cs b ON {_THR_OFFSET} + b.s = h.node
+  FROM hop1 h JOIN cs b ON {SUPPLIER_OFFSET} + b.s = h.node
   WHERE b.c <> h.seed
 ),
 reach AS (
@@ -529,11 +529,11 @@ def graph_two_hop_reach_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("c_custkey").alias("seed"))
     )
     hop1 = seeds.join(cs, seeds.seed == cs.c).select(
-        "seed", (F.lit(_THR_OFFSET) + F.col("s")).alias("node")
+        "seed", (F.lit(SUPPLIER_OFFSET) + F.col("s")).alias("node")
     )
     hop2 = (
         hop1.join(
-            cs.select((F.lit(_THR_OFFSET) + F.col("s")).alias("sn"), "c"),
+            cs.select((F.lit(SUPPLIER_OFFSET) + F.col("s")).alias("sn"), "c"),
             F.col("node") == F.col("sn"),
         )
         .filter(F.col("c") != F.col("seed"))

@@ -26,12 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from c2_duckdb_runner_spark.operators.graph import (
-    _BFS_ROUNDS,
-    _bfs_oracle,
-    _edges,
-)
+from c2_duckdb_runner_spark.operators.graph import _BFS_ROUNDS, _bfs_oracle
 from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.relations import trade_edges
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
 
@@ -337,7 +334,7 @@ def graph_harmonic_closeness_seeds(spark: SparkSession, sf_dir: str) -> DataFram
 
     Scale shape: identical to BFS (one keyed edges⨝distances shuffle +
     one min-fold per round), then a {_BFS_ROUNDS}-row aggregate."""
-    edges = scratch_persist(_edges(spark, sf_dir))
+    edges = scratch_persist(trade_edges(spark, sf_dir))
     dist = (
         load(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") % 100 == 0)

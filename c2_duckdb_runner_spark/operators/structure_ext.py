@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.relations import trade_edges, trade_edges_sql
 from c2_duckdb_runner_spark.session import scratch_persist, shuffle_width
 from c2_duckdb_runner_spark.tables import load, load_spread
 
@@ -38,40 +39,12 @@ _KCORE_ROUNDS = 4
 # graph is too dense for peeling to bite at fixture scale (min degree in
 # the hundreds); the sampled graph has median degree ~5, so a k=4 peel
 # exhibits the real cascade (removing a node drops neighbors under k).
-_KEDGES_SQL = """
-  SELECT DISTINCT o_custkey AS src, 10000000 + l_suppkey AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-  WHERE o_orderkey % 13 = 0
-    AND o_custkey IS NOT NULL AND l_suppkey IS NOT NULL
-  UNION
-  SELECT DISTINCT 10000000 + l_suppkey AS src, o_custkey AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-  WHERE o_orderkey % 13 = 0
-    AND o_custkey IS NOT NULL AND l_suppkey IS NOT NULL
-"""
-
-
-def _kedges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load(spark, sf_dir, "orders").filter(
-        F.col("o_orderkey") % 13 == 0
-    ).select("o_orderkey", "o_custkey")
-    l = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        .select("o_custkey", (F.lit(10_000_000) + F.col("l_suppkey")).alias("supp"))
-        .distinct()
-        # r12: mirror from the materialized pair list — the union's two
-        # identical subtrees don't collapse under AQE (see graph._edges)
-        .localCheckpoint(eager=True)
-    )
-    fwd = pairs.select(F.col("o_custkey").alias("src"), F.col("supp").alias("dst"))
-    rev = pairs.select(F.col("supp").alias("src"), F.col("o_custkey").alias("dst"))
-    return fwd.union(rev)
+_KCORE_SAMPLE = "o_orderkey % 13 = 0"
 
 
 def _kcore_oracle() -> str:
     """Unroll the peel rounds as a DuckDB CTE chain (exact integers)."""
-    ctes = [f"e0 AS ({_KEDGES_SQL})"]
+    ctes = [f"e0 AS ({trade_edges_sql(_KCORE_SAMPLE)})"]
     for r in range(_KCORE_ROUNDS):
         ctes.append(
             f"d{r + 1} AS (SELECT src, COUNT(*) AS c FROM e{r} GROUP BY src)"
@@ -116,7 +89,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving nodes with their within-core degree after the final peel."""
     width = shuffle_width(spark)
     e = scratch_persist(
-        _kedges(spark, sf_dir).repartition(width, "src")
+        trade_edges(spark, sf_dir, _KCORE_SAMPLE).repartition(width, "src")
     )
     for _ in range(_KCORE_ROUNDS):
         keep = (

@@ -31,6 +31,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.relations import (
+    DAILY_MILLI_SQL,
+    TRADE_EDGES_SQL,
+    daily_milli,
+    trade_edges,
+)
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
 
@@ -38,7 +44,6 @@ from c2_duckdb_runner_spark.tables import load
 # graph_random_walks_hash
 # ---------------------------------------------------------------------------
 
-_OFFSET = 10_000_000  # supplier-id offset; same convention as graph.py
 _WALK_SEEDS = 20  # customers 1..20 that trade
 _WALK_STEPS = 4
 
@@ -46,15 +51,7 @@ _RANKED_SQL = f"""
   SELECT src, dst,
          ROW_NUMBER() OVER (PARTITION BY src ORDER BY dst) - 1 AS idx,
          COUNT(*) OVER (PARTITION BY src) AS outdeg
-  FROM (
-    SELECT DISTINCT o_custkey AS src, {_OFFSET} + l_suppkey AS dst
-    FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    WHERE o_custkey IS NOT NULL AND l_suppkey IS NOT NULL
-    UNION
-    SELECT DISTINCT {_OFFSET} + l_suppkey AS src, o_custkey AS dst
-    FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    WHERE o_custkey IS NOT NULL AND l_suppkey IS NOT NULL
-  )
+  FROM ({TRADE_EDGES_SQL})
 """
 
 
@@ -107,26 +104,8 @@ def graph_random_walks_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter, so a million concurrent walkers cost {_WALK_STEPS} linear
     joins total — the frontier never fans out beyond one row per walker.
 
-    Cites graph.py's edge convention (supplier ids offset by 10M)."""
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        # NULL endpoints are not graph nodes (r11 hostile pin)
-        .filter(
-            F.col("o_custkey").isNotNull() & F.col("l_suppkey").isNotNull()
-        )
-        .select("o_custkey", (F.lit(_OFFSET) + F.col("l_suppkey")).alias("supp"))
-        .distinct()
-        # r12: mirror from the materialized pair list — the union's two
-        # identical subtrees don't collapse under AQE (see graph._edges)
-        .localCheckpoint(eager=True)
-    )
-    edges = pairs.select(
-        F.col("o_custkey").alias("src"), F.col("supp").alias("dst")
-    ).union(
-        pairs.select(F.col("supp").alias("src"), F.col("o_custkey").alias("dst"))
-    )
+    Cites relations.py's edge convention (supplier ids offset by 10M)."""
+    edges = trade_edges(spark, sf_dir)
     wsrc = Window.partitionBy("src")
     ranked = scratch_persist(
         edges.select(
@@ -374,18 +353,10 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ts_theil_sen_slope
 # ---------------------------------------------------------------------------
 
-_DAILY_SQL = """
-  SELECT event_type, date_trunc('day', ts) AS d,
-         (10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))
-           // CAST(COUNT(*) AS BIGINT) AS x
-  FROM events GROUP BY event_type, date_trunc('day', ts)
-"""
-
-
 @register(
     "ts_theil_sen_slope",
     oracle=f"""
-WITH daily AS ({_DAILY_SQL}),
+WITH daily AS ({DAILY_MILLI_SQL}),
 slopes AS (
   SELECT a.event_type,
          CASE WHEN b.x - a.x >= 0
@@ -422,16 +393,7 @@ def ts_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the VALUE at rank (n+1) div 2 is deterministic regardless of how
     equal slopes tie-break. Pair enumeration runs on the ~30-point daily
     rollup (~435 pairs/key at any corpus size), partitioned by key."""
-    daily = (
-        load(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("d"))
-        .agg(
-            F.expr(
-                "(10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))"
-                " div CAST(COUNT(*) AS BIGINT)"
-            ).alias("x")
-        )
-    )
+    daily = daily_milli(spark, sf_dir)
     a, b = daily.alias("a"), daily.alias("b")
     slopes = a.join(
         b,

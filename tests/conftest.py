@@ -34,3 +34,13 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def hostile_sf_dir(sf_dir, tmp_path_factory):
+    """Hostile twins of the six fuzz tables (hostile.py), written once."""
+    from c2_duckdb_runner_spark import hostile
+
+    out = str(tmp_path_factory.mktemp("hostile_twin"))
+    hostile.make_hostile_fixtures(sf_dir, out)
+    return out

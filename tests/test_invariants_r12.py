@@ -12,7 +12,8 @@
    cell count, 1 once cells cover 2x the shuffle width, capped at 8.
 4. graph_kcore_peel's one-exchange round relies on the edge relation
    being closed under endpoint swap AS A MULTISET — pinned on the real
-   fixture builder.
+   fixture builder. On the hostile twin the sampled edges must also carry
+   no NULL endpoint, as their oracle twin excludes them.
 """
 
 from __future__ import annotations
@@ -26,8 +27,9 @@ from c2_duckdb_runner_spark.operators.dedup import (
     _exploded_shingles,
     _with_shingles,
 )
-from c2_duckdb_runner_spark.operators.structure_ext import _kedges
+from c2_duckdb_runner_spark.operators.structure_ext import _KCORE_SAMPLE
 from c2_duckdb_runner_spark.plans import inspect as pi
+from c2_duckdb_runner_spark.relations import trade_edges
 from c2_duckdb_runner_spark.session import shuffle_width
 
 
@@ -86,8 +88,18 @@ def test_cos_salt_width_rules(spark):
     assert max(widths) <= 8 and min(widths) >= 1
 
 
-def test_kcore_edges_closed_under_swap(spark, sf_dir):
+def _kedges(spark, sf_dir):
+    return trade_edges(spark, sf_dir, _KCORE_SAMPLE)
+
+
+def test_kcore_edges_closed_under_swap(spark, sf_dir, hostile_sf_dir):
     e = _kedges(spark, sf_dir).collect()
     fwd = Counter((r.src, r.dst) for r in e)
     rev = Counter((r.dst, r.src) for r in e)
     assert fwd == rev
+    # second input: the hostile twin, whose orders/lineitem carry NULL
+    # custkeys and suppkeys
+    h = _kedges(spark, hostile_sf_dir).collect()
+    assert h
+    assert [r for r in h if r.src is None or r.dst is None] == []
+    assert Counter((r.src, r.dst) for r in h) == Counter((r.dst, r.src) for r in h)

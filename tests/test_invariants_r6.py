@@ -189,7 +189,7 @@ def test_pagerank_mass_conservation_bounds(run, spark, sf_dir):
     sum(r) lies in (N*teleport + 0.85*(prev - E) - N, N*teleport +
     0.85*prev]. Chaining the bounds over the 3 rounds brackets the final
     total — a damping or join bug lands far outside."""
-    from c2_duckdb_runner_spark.operators.graph import _edges
+    from c2_duckdb_runner_spark.relations import trade_edges as _edges
 
     e = _edges(spark, sf_dir)
     E = e.count()
@@ -210,7 +210,7 @@ def test_bfs_levels_frontier_invariant(run, spark, sf_dir):
     level is in [0, 4], and along any edge (u, v) with dist(u) <= 3 the
     head must have dist(v) <= dist(u) + 1 (the frontier expands by
     exactly one hop per round)."""
-    from c2_duckdb_runner_spark.operators.graph import _edges
+    from c2_duckdb_runner_spark.relations import trade_edges as _edges
 
     dist = {r.node: r.dist for r in run("graph_bfs_multisource")}
     sources = {
@@ -839,7 +839,7 @@ def test_avg_neighbor_degree_endpoint_identity(run, spark, sf_dir):
     """A degree-k node contributes exactly k endpoint rows, so
     n_endpoints = degree * n_nodes per class and the classes partition
     the edge set."""
-    from c2_duckdb_runner_spark.operators.graph import _edges
+    from c2_duckdb_runner_spark.relations import trade_edges as _edges
 
     E = _edges(spark, sf_dir).count()
     rows = run("graph_avg_neighbor_degree")

@@ -53,7 +53,7 @@ sys.path.insert(0, REPO)
 
 import duckdb  # noqa: E402
 
-_OFFSET = 10_000_000  # graph.py:29 — supplier-node key offset
+_OFFSET = 10_000_000  # relations.SUPPLIER_OFFSET — supplier-node key offset
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -129,7 +129,7 @@ def _stage_cs(sf_dir: str, work: str) -> None:
         )
 
 
-# symmetrized node-graph edges over the staged cs (≡ graph.py _EDGES_SQL:
+# symmetrized node-graph edges over the staged cs (≡ relations.TRADE_EDGES_SQL:
 # the two UNION branches live in disjoint key domains and cs is already
 # distinct, so UNION ALL over the mirror equals the original UNION)
 _EDGES_OVER_CS = f"""
